@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.{IO, PanelCols}
 import graft.ops._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: prints `explain(formatted)` extracts for the
@@ -13,10 +12,7 @@ import org.apache.spark.sql.functions._
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Legs.session()
     implicit val pc: PanelCols = PanelCols("user_id", "ts", "value", Seq("event_id"))
 
     var failures = List.empty[String]
