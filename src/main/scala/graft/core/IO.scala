@@ -86,7 +86,7 @@ object IO {
     * row-group granularity, so a single-row-group file BIGGER than
     * `maxPartitionBytes` still reports many split-partitions while every
     * row lands in the one task holding the row-group start — the split
-    * count lies (measured r13, tools/SpreadScaleProbe: a 1.3 GB 1-RG
+    * count lies (measured r13, OPTIMIZATION_r13.md:164: a 1.3 GB 1-RG
     * file read as "11 partitions" ran its scan stage at parallelism
     * 1.0). When the scan has few files, read the footers and count the
     * actual row groups; plenty-of-files scans and non-file plans return

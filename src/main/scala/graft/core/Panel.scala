@@ -1,8 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.plans.{GraftPlanning, SeriesKernel, SeriesMap}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
+  GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Column-name configuration for long-format panels.
   *
@@ -53,21 +58,83 @@ object Panel {
     p.sortWithinPartitions(pc.idCol +: pc.orderCols: _*)
   }
 
-  /** Grouped/nested form: one row per series, values time-ordered.
+  /** Runs a per-series kernel over each series' time-sorted primitive
+    * buffers through the [[graft.plans.SeriesMap]] operator: one
+    * exchange on the id and one sort by (id, time, tie-breaks…, value),
+    * then one kernel call per series with no aggregate buffer, array
+    * column or UDF boxing in between. The sort is the order `grouped`
+    * has always given — `sort_array` over `struct(time, tie-breaks…,
+    * value)`: ascending, nulls first, equal times ordered by their
+    * tie-breaks, then by value.
     *
-    * `sort_array(collect_list(struct(ds, tiebreaks..., y)))` guarantees a
-    * deterministic time order — a bare `collect_list` is NOT
-    * order-deterministic in Spark (SURVEY §7.5 risk #1). Output:
-    * `[id, ys: Array[Double], ts: Array[Timestamp]]`.
-    */
-  def grouped(df: DataFrame)(implicit pc: PanelCols): DataFrame = {
-    val fields = (pc.timeCol.as("__t") +: pc.tieBreak.zipWithIndex.map {
-      case (c, i) => col(c).as(s"__tb$i")
-    }) :+ pc.targetCol.cast("double").as("__v")
-    df.groupBy(pc.idCol)
-      .agg(sort_array(collect_list(struct(fields: _*))).as("__pts"))
-      .select(pc.idCol, col("__pts.__v").as("ys"), col("__pts.__t").as("ts"))
+    * `time` maps the time column to the long the kernel sees (default:
+    * the column itself, which must then be integral, date or timestamp);
+    * the value is the target cast to double. `kernel` gets the time
+    * column's type and returns the kernel; output is `[id, kernel
+    * fields…]`. Every column is freshly aliased, so a self-join of the
+    * result resolves like one of any other DataFrame. */
+  def mapSeries(df: DataFrame, time: Column => Column = identity)(
+      kernel: DataType => SeriesKernel)(implicit pc: PanelCols): DataFrame = {
+    val spark = df.sparkSession
+    GraftPlanning.ensure(spark)
+    val in = df.select((pc.idCol +: pc.timeCol.as("__t") +:
+      pc.tieBreak.zipWithIndex.map { case (c, i) => col(c).as(s"__tb$i") }) :+
+      pc.targetCol.cast("double").as("__v"): _*)
+    val child = GraftPlanBridge.analyzed(in)
+    // the time and value expressions resolved against the child's own
+    // attributes (a select over `in` keeps them), time zone included
+    val Seq(t, v) = (GraftPlanBridge.analyzed(
+        in.select(time(col("__t")).as("__tk"), col("__v"))): @unchecked) match {
+      case Project(list, _) => list.map {
+        case Alias(e, _) => e
+        case e => e
+      }
+    }
+    require((t.references ++ v.references).subsetOf(child.outputSet),
+      "mapSeries: the time expression must read the time column only")
+    val timeType = child.output(1).dataType
+    val k = kernel(timeType)
+    val node = SeriesMap(child.output.head, child.output.tail, t, v, k,
+      k.schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()),
+      child)
+    GraftPlanBridge.ofRows(spark,
+      Project(node.output.map(a => Alias(a, a.name)()), node))
   }
+
+  /** Grouped/nested form: one row per series, values time-ordered —
+    * `[id, ys: Array[Double], ts: Array[<time type>]]`, nulls kept in
+    * both arrays, in [[mapSeries]]' order. The time column must be
+    * integral, date or timestamp. */
+  def grouped(df: DataFrame)(implicit pc: PanelCols): DataFrame = {
+    val ysType = ArrayType(DoubleType, nullable(df, pc.targetCol.cast("double")))
+    val tNull = nullable(df, pc.timeCol)
+    mapSeries(df)(tt => SeriesKernel("grouped", StructType(Seq(
+        StructField("ys", ysType, nullable = false),
+        StructField("ts", ArrayType(tt, tNull), nullable = false)))) { s =>
+      Iterator.single(new GenericInternalRow(Array[Any](
+        SeriesKernel.valueArray(s), SeriesKernel.timeArray(s, tt))))
+    })
+  }
+
+  /** The time mapping of kernels that never read the time: any
+    * orderable time column then works. */
+  val noTime: Column => Column = _ => lit(0L)
+
+  /** [[grouped]] without the time array: `[id, ys: Array[Double]]`; any
+    * orderable time column. */
+  def groupedValues(df: DataFrame)(implicit pc: PanelCols): DataFrame = {
+    val ysType = ArrayType(DoubleType, nullable(df, pc.targetCol.cast("double")))
+    mapSeries(df, noTime)(_ => SeriesKernel("grouped_values", StructType(Seq(
+        StructField("ys", ysType, nullable = false)))) { s =>
+      Iterator.single(new GenericInternalRow(Array[Any](SeriesKernel.valueArray(s))))
+    })
+  }
+
+  // the arrays admit nulls only where the column does, as the struct
+  // aggregate's did: a UDF reading a null-free Array[Double] then takes
+  // the primitive copy instead of a per-element null-checked one
+  private def nullable(df: DataFrame, c: Column): Boolean =
+    df.select(c).schema.head.nullable
 
   /** Per-series inferred frequency = min successive time delta, in
     * microseconds (reference `_infer_freq`, models/_time_utils.py:15-27).

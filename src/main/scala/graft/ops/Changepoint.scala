@@ -1,17 +1,21 @@
 package graft.ops
 
 import graft.core.{Panel, PanelCols}
-import graft.kernels.{Bocpd, Pelt}
+import graft.kernels.{Bocpd, MannKendall, Pelt}
+import graft.plans.SeriesKernel
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Changepoint & trend operators (reference polars_ts/changepoint/).
   *
-  * `cusum` is 100% native window expressions. `pelt`/`bocpd` are
-  * inherently-sequential per-series DP kernels: grouped-array form → kernel
-  * → posexplode back to rows. The one shuffle is the groupBy(id); kernels
-  * run data-parallel across series in executor tasks.
+  * `cusum` is 100% native window expressions. `pelt` and `mannKendall`
+  * run their kernels on each series' sorted primitive buffers through
+  * [[Panel.mapSeries]] — one exchange and one sort, no aggregate, no
+  * UDF; `bocpd` and `sensSlope` still go grouped-array form → UDF →
+  * explode. Kernels run data-parallel across series in executor tasks.
   */
 object Changepoint {
 
@@ -30,20 +34,20 @@ object Changepoint {
   /** PELT changepoints: `[id, changepoint_idx, ds]`, one row per detected
     * changepoint (reference changepoint/pelt.py:100-185; indices are
     * 0-based positions into the time-sorted series, matching the
-    * reference's segment-start convention). Default penalty 2·ln n. */
+    * reference's segment-start convention). Default penalty 2·ln n.
+    * Runs [[Pelt.detect]] on each series' buffers through
+    * [[Panel.mapSeries]]; the time column must be integral, date or
+    * timestamp. */
   def pelt(df: DataFrame, cost: String = "mean", penalty: Option[Double] = None,
       minSize: Int = 2, prune: Boolean = true)(implicit pc: PanelCols): DataFrame = {
     val costModel = Pelt.cost(cost)
-    val detectUdf = udf((ys: Seq[Double]) => {
-      val arr = ys.toArray
-      val pen = penalty.getOrElse(2.0 * math.log(arr.length.toDouble))
-      Pelt.detect(arr, costModel, pen, minSize, prune)
+    Panel.mapSeries(df)(tt => SeriesKernel("pelt", StructType(Seq(
+        StructField("changepoint_idx", LongType, nullable = false),
+        StructField(pc.time, tt)))) { s =>
+      val pen = penalty.getOrElse(2.0 * math.log(s.n.toDouble))
+      Pelt.detect(s.values("pelt"), costModel, pen, minSize, prune).iterator.map(i =>
+        new GenericInternalRow(Array[Any](i, SeriesKernel.timeValue(s, i.toInt, tt))))
     })
-    Panel.grouped(df)
-      .select(pc.idCol, col("ts").as("__ts"), detectUdf(col("ys")).as("__cps"))
-      .select(pc.idCol, explode(col("__cps")).as("changepoint_idx"), col("__ts"))
-      .withColumn(pc.time, expr(s"__ts[int(changepoint_idx)]"))
-      .drop("__ts")
   }
 
   /** BOCPD per-row outputs `[.., run_length, changepoint_prob,
@@ -66,11 +70,15 @@ object Changepoint {
   }
 
   /** Mann-Kendall normalized trend statistic per series (reference
-    * src/mann_kendall.rs:24-77): `[id, mann_kendall]`. */
-  def mannKendall(df: DataFrame)(implicit pc: PanelCols): DataFrame = {
-    val mkUdf = udf((ys: Seq[Double]) => graft.kernels.MannKendall.stat(ys.toArray))
-    Panel.grouped(df).select(pc.idCol, mkUdf(col("ys")).as("mann_kendall"))
-  }
+    * src/mann_kendall.rs:24-77): `[id, mann_kendall]`, from
+    * [[graft.kernels.MannKendall.stat]] on each series' buffer through
+    * [[Panel.mapSeries]]. */
+  def mannKendall(df: DataFrame)(implicit pc: PanelCols): DataFrame =
+    Panel.mapSeries(df, Panel.noTime)(_ => SeriesKernel("mann_kendall",
+        StructType(Seq(StructField("mann_kendall", DoubleType, nullable = false)))) { s =>
+      Iterator.single(new GenericInternalRow(
+        Array[Any](MannKendall.stat(s.values("mann_kendall")))))
+    })
 
   /** Theil-Sen slope per series (reference src/sens_slope.rs:20-49):
     * `[id, sens_slope]`. */

@@ -311,7 +311,7 @@ object Dedup {
     * incremental pattern: [[minhashSignatures]] once per ingest batch
     * (stored next to the corpus) + [[minhashLshIncremental]] per batch
     * — measured at the 100× probe: 25.5× wall for full recompute vs
-    * 12.7× with persisted signatures (SCALE100, MinhashDeepProbe). A
+    * 12.7× with persisted signatures (SCALE100; COVERAGE.md:715). A
     * one-line warning fires when the input's estimated size crosses
     * [[IncrementalHintBytes]], so the pattern is discoverable exactly
     * when it starts to matter.
@@ -330,8 +330,8 @@ object Dedup {
     val k = bands * rowsPerBand
     // auto-hint: estimated plan size past the threshold → point at the
     // incremental pattern (plan-time stats only; never triggers a job).
-    // -Dgraft.mh.noprobe switches it off — the A/B knob the r12 drift
-    // adjudication probe (tools/MinhashAbProbe) flips between runs.
+    // -Dgraft.mh.noprobe switches it off — the A/B knob of the r12 drift
+    // adjudication (OPTIMIZATION_r12.md:411).
     if (!sys.props.get("graft.mh.noprobe").contains("true")) try {
       val est = org.apache.spark.sql.GraftPlanBridge.analyzed(df)
         .stats.sizeInBytes

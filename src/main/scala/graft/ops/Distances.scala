@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape: grouped form (one shuffle) → self-join with `id_1 < id_2`
   * (symmetric dedup, half the work — utils.rs:222-229) → pure-Scala DP
-  * kernel as a deterministic UDF. The reference's Rayon pair-parallelism
+  * kernel as a deterministic UDF. [[pairwise]] groups through
+  * [[Panel.groupedValues]] (the SeriesMap operator: one exchange and
+  * sort, no aggregate); `pairwiseMulti` keeps its inline `collect_list`
+  * grouping. The reference's Rayon pair-parallelism
   * becomes task parallelism over join partitions.
   *
   * Scale path (SURVEY §7.5 risk #7): `maxLen` truncation + an optional
@@ -75,7 +78,7 @@ object Distances {
     // same ~70%-of-wall-time lesson as the cosine UDF (Similarity)
     val dist = udf((a: Array[Double], b: Array[Double]) =>
       kernel(a, b, params))
-    val g0 = Panel.grouped(df).select(pc.idCol, col("ys"))
+    val g0 = Panel.groupedValues(df)
     // LB_Keogh prefilter is sound for the Sakoe-Chiba DTW kernel (L1 cost)
     val lbWindow = if (metric == "dtw") params.get("window").map(_.toInt) else None
     val useLb = maxDist.isDefined && lbWindow.isDefined

@@ -1,8 +1,15 @@
 package graft.ops
 
 import graft.core.{Panel, PanelCols}
+import graft.plans.SeriesKernel
+import java.time.ZoneOffset
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
+  StructType, TimestampNTZType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Baseline + exponential-smoothing forecasts emitting the reference's
   * `[id, ds, y_hat]` shape with `h` future rows per series and timestamps
@@ -10,9 +17,10 @@ import org.apache.spark.sql.functions._
   * polars_ts/models/baselines.py, exponential_smoothing.py).
   *
   * naive / seasonal-naive / moving-average are pure Spark SQL (one groupBy
-  * + explode(sequence) — no per-series loops, no UDFs). The ETS family
-  * folds the kernel over the grouped array form inside a UDF: one row per
-  * series in, h rows out — the shuffle is the single groupBy(id).
+  * + explode(sequence) — no per-series loops, no UDFs). The ETS/FFT
+  * family ([[multiForecast]]) calls its kernels on each series' sorted
+  * primitive buffer through [[Panel.mapSeries]]: one series in, h rows
+  * per model out, one exchange on the id and no UDF.
   */
 object ForecastBaselines {
 
@@ -59,41 +67,50 @@ object ForecastBaselines {
 
   import graft.kernels.{Ets, FftForecast}
 
-  /** Run several named forecast kernels from ONE grouped pass over the
-    * panel — a single shuffle produces every model's h-step forecast plus
-    * the future-timestamp scaffold (last ts and min-delta frequency come
-    * from the already-sorted ts array, not a second window+groupBy scan).
+  /** Run several named forecast kernels from ONE pass over the panel —
+    * a single exchange and sort produce every model's h-step forecast
+    * plus the future-timestamp scaffold. Each kernel runs on the series'
+    * sorted value buffer through [[Panel.mapSeries]]; the last time and
+    * the frequency (minimum successive delta, in microseconds of the time
+    * cast to timestamp, null times skipped) come from the same sorted
+    * buffer. A one-point series has no frequency, so its `ds` is null;
+    * steps past a kernel's forecast length get a null `y_hat`.
     * Output: `[id, model, step, ds, y_hat]`. */
   def multiForecast(df: DataFrame, h: Int,
       kernels: Seq[(String, Array[Double] => Array[Double])])(
       implicit pc: PanelCols): DataFrame = {
-    val fns = kernels.map(_._2)
-    val fcUdf = udf((ys: Seq[Double]) => {
-      val arr = ys.toArray
-      fns.map(f => f(arr))
+    require(h >= 1, s"multiForecast: horizon must be at least 1, got $h")
+    val fns = kernels.map(_._2).toArray
+    val names = kernels.map(_._1).toArray
+    // `ds` is timestamp_micros(last + step · freq) cast to timestamp_ntz,
+    // i.e. the instant read in the session's time zone
+    val zone = DateTimeUtils.getZoneId(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    Panel.mapSeries(df, t => unix_micros(t.cast("timestamp")))(_ =>
+      SeriesKernel("multi_forecast", StructType(Seq(
+        StructField("model", StringType, nullable = false),
+        StructField("step", LongType, nullable = false),
+        StructField(pc.time, TimestampNTZType),
+        StructField("y_hat", DoubleType)))) { s =>
+      val n = s.n
+      var freq = Long.MaxValue
+      var i = 1
+      while (i < n) {
+        if (!s.tIsNull(i - 1) && !s.tIsNull(i)) freq = math.min(freq, s.ts(i) - s.ts(i - 1))
+        i += 1
+      }
+      val hasDs = !s.tIsNull(n - 1) && freq != Long.MaxValue
+      val last = s.ts(n - 1)
+      val ys = s.values("multiForecast")
+      val fcs = fns.map(f => f(ys))
+      val models = names.map(UTF8String.fromString)
+      Iterator.tabulate(fns.length * h) { j =>
+        val m = j / h
+        val step = j % h + 1
+        new GenericInternalRow(Array[Any](models(m), step.toLong,
+          if (hasDs) DateTimeUtils.convertTz(last + step * freq, ZoneOffset.UTC, zone) else null,
+          if (step <= fcs(m).length) fcs(m)(step - 1) else null))
+      }
     })
-    val nameArr = array(kernels.map(k => lit(k._1)): _*)
-    Panel.grouped(df)
-      .withColumn("__us", transform(col("ts"), t => unix_micros(t.cast("timestamp"))))
-      .select(pc.idCol,
-        fcUdf(col("ys")).as("__fcs"),
-        element_at(col("__us"), -1).as("__last_us"),
-        // min successive delta: us is time-sorted, so pairwise diffs of the
-        // array replicate seriesMeta's lag-window min (zip_with pads the
-        // tail with null, which array_min ignores)
-        array_min(zip_with(
-          slice(col("__us"), lit(2), greatest(size(col("__us")) - 1, lit(0))),
-          col("__us"), (a, b) => a - b)).as("__freq"))
-      .select(pc.idCol, posexplode(col("__fcs")).as(Seq("__m", "__fc")),
-        col("__last_us"), col("__freq"))
-      .select(pc.idCol, element_at(nameArr, col("__m") + 1).as("model"),
-        col("__fc"), col("__last_us"), col("__freq"),
-        explode(sequence(lit(1L), lit(h.toLong))).as("step"))
-      .withColumn(pc.time,
-        timestamp_micros(col("__last_us") + col("step") * col("__freq"))
-          .cast("timestamp_ntz"))
-      .select(pc.idCol, col("model"), col("step"), pc.timeCol,
-        element_at(col("__fc"), col("step").cast("int")).as("y_hat"))
   }
 
   private def kernelForecast(df: DataFrame, h: Int,

@@ -32,7 +32,7 @@ object Similarity {
     * capped at the session parallelism), NOT IO.table's fixed 32: every
     * Spark task carries a fixed CPU cost (hash-aggregate page
     * allocation, per-task codegen instances — measured 40–120 ms/task on
-    * this box, tools/SpreadProbe: an 8 k-row aggregate cost 0.8 cpu-s at
+    * this box, OPTIMIZATION_r13.md:144: an 8 k-row aggregate cost 0.8 cpu-s at
     * 1 partition, 1.35 at 8, 5.8 at 32), so a width the data cannot
     * amortize burns more CPU than the kernel it parallelizes. IO.table
     * keeps its fixed width because its consumers include

@@ -73,7 +73,8 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoin]] to [[AsofJoinExec]]. Injected via
+/** Plans [[AsofJoin]] to [[AsofJoinExec]], [[IntervalJoin]] to
+  * [[IntervalJoinExec]] and [[SeriesMap]] to [[SeriesMapExec]]. Injected via
   * [[GraftExtensions]] (`spark.sql.extensions`) or the live-session
   * path [[GraftPlanning.ensure]]. */
 object GraftStrategy extends SparkStrategy {
@@ -84,6 +85,9 @@ object GraftStrategy extends SparkStrategy {
     case IntervalJoin(l, r, lk, rk, lt, rs, re, pay, pAttrs, incl) =>
       IntervalJoinExec(lk, rk, lt, rs, re, pay, pAttrs, incl,
         planLater(l), planLater(r)) :: Nil
+    case SeriesMap(key, order, time, value, kernel, produced, child) =>
+      SeriesMapExec(key, order, time, value, kernel, produced,
+        planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -96,7 +100,11 @@ object GraftStrategy extends SparkStrategy {
   * are the only produced attributes, never referenced by a pushable
   * predicate). Reaches fixpoint in one pass: after the rewrite the
   * remaining conjuncts reference carry attributes, so the partition
-  * yields nothing further to push. */
+  * yields nothing further to push.
+  *
+  * Also pushes deterministic key-only predicates below [[SeriesMap]]: a
+  * series' output depends on that series' rows alone, so dropping whole
+  * series before the node selects the same output rows. */
 object PushFilterThroughAsofJoin extends Rule[LogicalPlan]
   with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -106,6 +114,9 @@ object PushFilterThroughAsofJoin extends Rule[LogicalPlan]
     case f @ Filter(cond, ij: IntervalJoin) =>
       rewrite(f, cond, ij.left,
         newLeft => ij.copy(left = newLeft))
+    case f @ Filter(cond, sm: SeriesMap) =>
+      rewrite(f, cond, sm.child,
+        newChild => sm.copy(child = newChild))
   }
 
   private def rewrite(f: Filter, cond: Expression, left: LogicalPlan,

@@ -57,8 +57,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the whole-operator SQL front door: FROM-clause TVFs building the
     // same analyzed plans as the Scala API (graft_asof, graft_range_join)
     GraftFunctions.tableDescriptions.foreach(ext.injectTableFunction)
-    // whole-operator tier: the AsofJoin logical node's planner strategy
-    // and its left-filter pushdown rule (live-session path:
+    // whole-operator tier: the planner strategy for the AsofJoin,
+    // IntervalJoin and SeriesMap logical nodes, the filter pushdown rule
+    // and the as-of column pruning rule (live-session path:
     // GraftPlanning.ensure)
     ext.injectPlannerStrategy(_ => GraftStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsofJoin)

@@ -139,17 +139,20 @@ object Legs {
       .drop("__rep")
   }
 
-  /** `factor` replicas of an embedding set, ids `vec_id·factor + rep`;
-    * replica r circularly shifts every vector by r places, which keeps
-    * the in-replica cosine structure (the shift cycles at the dimension). */
+  /** `factor` replicas of an embedding set, ids `vec_id·factor + rep`.
+    * Replica r > 0 permutes the coordinates of every vector by the same
+    * seeded permutation — positions sorted by `xxhash64(r, position)` —
+    * which keeps every in-replica dot product and cosine. A circular
+    * shift by r would cycle at the dimension: replica 64 of a 64-d set
+    * would equal replica 0, and past it `slice` gets a negative length. */
   def replicateEmb(emb: DataFrame, factor: Int): DataFrame =
     emb.withColumn("__rep", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("vec_id", col("vec_id").cast("long") * factor + col("__rep"))
       .withColumn("embedding",
-        when(col("__rep") === 0, col("embedding")).otherwise(concat(
-          slice(col("embedding"), col("__rep") + 1,
-            size(col("embedding")) - col("__rep")),
-          slice(col("embedding"), lit(1), col("__rep")))))
+        when(col("__rep") === 0, col("embedding")).otherwise(transform(
+          array_sort(transform(col("embedding"), (x, i) =>
+            struct(xxhash64(col("__rep"), i).as("k"), i.as("i"), x.as("x")))),
+          _.getField("x"))))
       .drop("__rep")
 
   /** Best-effort recursive delete of a scratch directory. Callers run it

@@ -2,21 +2,31 @@ package graft.tools
 
 import graft.core.{IO, PanelCols}
 import graft.ops._
+import graft.plans.SeriesMapExec
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: prints `explain(formatted)` extracts for the
   * engine's core plan shapes so shuffle-count / pushdown / broadcast
   * regressions are visible, and exits non-zero when a plan loses
-  * whole-stage codegen entirely (the regression this audit exists to
-  * catch). Run: sbt "runMain graft.tools.PlanAudit". */
-object PlanAudit {
+  * whole-stage codegen entirely or a grouped-series operator (pairwise
+  * DTW, multiForecast, PELT, Mann-Kendall) is not `SeriesMapExec` over
+  * one hash exchange and one sort. Run: sbt "runMain graft.tools.PlanAudit". */
+object PlanAudit extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Legs.session()
     implicit val pc: PanelCols = PanelCols("user_id", "ts", "value", Seq("event_id"))
 
     var failures = List.empty[String]
-    def audit(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    var shapeFailures = List.empty[String]
+    def audit(name: String, df: org.apache.spark.sql.DataFrame,
+        seriesMap: Boolean = false): Unit = {
       // run the query first: under AQE the codegen spans only exist in the
       // FINAL adaptive plan (pre-execution toString has no `*(n)` markers —
       // the r5 wholestage_spans=0 bug)
@@ -37,6 +47,10 @@ object PlanAudit {
       println(s"exchanges=$exchanges broadcasts=$broadcasts wholestage_spans=$codegen")
       println(scans.take(2000))
       if (codegen == 0) failures ::= name
+      if (seriesMap) seriesMapShape(df.queryExecution.executedPlan).foreach { why =>
+        println(s"SHAPE FAILED: $why")
+        shapeFailures ::= s"$name: $why"
+      }
     }
 
     val ev = IO.events(spark, dir)
@@ -50,14 +64,19 @@ object PlanAudit {
         lag(col("value"), 1).over(pc.w).as("l1")))
     audit("emb_knn (expect broadcast join)",
       graft.SparkEntry.queries("emb_knn_brute")(spark, dir))
-    audit("pairwise dtw (expect 1 shuffle + broadcast self-join)",
-      Distances.pairwise(ev, "dtw"))
+    audit("pairwise dtw (expect SeriesMapExec over 1 hash exchange + 1 sort, broadcast self-join)",
+      Distances.pairwise(ev, "dtw"), seriesMap = true)
     audit("naive forecast (expect reused shuffle on user_id)",
       ForecastBaselines.naive(ev, 7))
-    audit("multiForecast ses+hw (expect ONE exchange for both models)",
+    audit("multiForecast ses+hw (expect SeriesMapExec over ONE hash exchange + sort for both models)",
       ForecastBaselines.multiForecast(ev, 12, Seq(
         "ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12)),
-        "hw" -> (ys => graft.kernels.Ets.holtWinters(ys, 0.3, 0.1, 0.1, 24, true, 12)))))
+        "hw" -> (ys => graft.kernels.Ets.holtWinters(ys, 0.3, 0.1, 0.1, 24, true, 12)))),
+      seriesMap = true)
+    audit("pelt (expect SeriesMapExec over 1 hash exchange + 1 sort)",
+      Changepoint.pelt(ev, "mean"), seriesMap = true)
+    audit("mann-kendall (expect SeriesMapExec over 1 hash exchange + 1 sort)",
+      Changepoint.mannKendall(ev), seriesMap = true)
     audit("auto_arima (expect ONE exchange, grouped kernel)",
       Advanced.autoArima(ev, h = 5, maxP = 1, maxQ = 1))
     audit("pipeline forecast (expect grouped tails + seriesMeta, no driver matrix)",
@@ -251,10 +270,50 @@ object PlanAudit {
     })
 
     spark.stop()
-    if (failures.nonEmpty) {
+    if (failures.nonEmpty)
       System.err.println(s"\nPLAN AUDIT FAILED — zero whole-stage codegen " +
         s"spans in: ${failures.reverse.mkString(", ")}")
-      sys.exit(1)
+    if (shapeFailures.nonEmpty)
+      System.err.println(s"\nPLAN AUDIT FAILED — grouped-series shape: " +
+        shapeFailures.reverse.mkString("; "))
+    if (failures.nonEmpty || shapeFailures.nonEmpty) sys.exit(1)
+  }
+
+  /** Why a grouped-series plan is not the SeriesMap shape, if it is not:
+    * below every `SeriesMapExec`, down to the first exchange, there is
+    * one sort and nothing else, and that exchange (or its reuse) hashes
+    * on the series key; no object-hash aggregate appears anywhere.
+    * Exchanges further down belong to the input (e.g. a normalized
+    * scan), not to the operator. */
+  def seriesMapShape(plan: SparkPlan): Option[String] = {
+    // the operators between a node and the first exchange below it,
+    // codegen and adaptive wrappers skipped, the exchange last
+    @scala.annotation.tailrec
+    def chain(p: SparkPlan, acc: List[SparkPlan]): List[SparkPlan] = p match {
+      case _: ShuffleExchangeExec | _: ReusedExchangeExec => (p :: acc).reverse
+      case s: ShuffleQueryStageExec => chain(s.plan, acc)
+      case w: WholeStageCodegenExec => chain(w.child, acc)
+      case i: InputAdapter => chain(i.child, acc)
+      case r: AQEShuffleReadExec => chain(r.child, acc)
+      case o if o.children.size == 1 => chain(o.children.head, o :: acc)
+      case o => (o :: acc).reverse
     }
+    val sms = collect(plan) { case e: SeriesMapExec => e }
+    if (sms.isEmpty) Some("no SeriesMapExec")
+    else if (collect(plan) { case a: ObjectHashAggregateExec => a }.nonEmpty)
+      Some("ObjectHashAggregate present")
+    else sms.flatMap { sm =>
+      val below = chain(sm.child, Nil)
+      val hashed = below.lastOption.collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+        case r: ReusedExchangeExec => r.outputPartitioning
+      }.exists {
+        case h: HashPartitioning => h.expressions.map(_.semanticHash()) ==
+          Seq(sm.key.semanticHash())
+        case _ => false
+      }
+      if (hashed && below.init.map(_.nodeName) == Seq("Sort")) None
+      else Some(s"below SeriesMapExec: ${below.map(_.nodeName).mkString(" > ")}")
+    }.headOption
   }
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.TestSpark
 import graft.core.IO
+import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,6 +93,31 @@ class BenchLegsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(emb2.count() == 2 * emb.count())
     assert(emb2.select("vec_id").distinct().count() == 2 * emb.count())
   }
+
+  // a circular shift aliased replica 64 onto replica 0 of a 64-d set
+  // and failed past it; the seeded coordinate permutation does neither
+  for (factor <- Seq(66, 130))
+    test(s"embedding replicas at factor $factor are distinct from replica 0") {
+      val emb = IO.embeddings(spark, dir).select("vec_id", "embedding")
+      val n = emb.count()
+      val rep = Legs.replicateEmb(emb, factor)
+        .withColumn("__r", col("vec_id") % factor)
+        .withColumn("__b", (col("vec_id") / factor).cast("long"))
+        .cache()
+      try {
+        assert(rep.count() == factor * n)
+        assert(rep.select("vec_id").distinct().count() == factor * n)
+        val base = rep.filter(col("__r") === 0)
+          .select(col("__b"), col("embedding").as("__e0"))
+        val aliased = rep.filter(col("__r") > 0).join(base, "__b")
+          .filter(col("embedding") === col("__e0")).count()
+        assert(aliased == 0, s"$aliased replicas equal their replica 0")
+        // a coordinate permutation keeps each vector's multiset of values
+        val moved = rep.join(base, "__b")
+          .filter(array_sort(col("embedding")) =!= array_sort(col("__e0"))).count()
+        assert(moved == 0)
+      } finally rep.unpersist()
+    }
 
   // the replica fixture's correctness rests on its cipher family: every
   // replica permutation must be a bijection (or Jaccard structure is not
